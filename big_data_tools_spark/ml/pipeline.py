@@ -17,18 +17,18 @@ randomSplit([0.7, 0.3], seed=7) ``:737``.
 
 from __future__ import annotations
 
+from collections import defaultdict
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import (
     GBTClassifier,
     LogisticRegression,
     RandomForestClassifier,
 )
-from pyspark.ml.evaluation import (
-    BinaryClassificationEvaluator,
-    MulticlassClassificationEvaluator,
-)
+from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.ml.feature import (
     OneHotEncoder,
     RFormula,
@@ -122,32 +122,92 @@ def featurize(
 def evaluate_model(model, df: DataFrame, prefix: str) -> dict[str, float]:
     """AUC + accuracy + weighted precision/recall/F1, DataFrame-native
     (replaces mllib BinaryClassificationMetrics/MulticlassMetrics,
-    reference :836-862)."""
-    preds = model.transform(df)
-    auc = BinaryClassificationEvaluator(
-        labelCol="label", rawPredictionCol="rawPrediction", metricName="areaUnderROC"
-    ).evaluate(preds)
-    multi = MulticlassClassificationEvaluator(labelCol="label", predictionCol="prediction")
-    out = {f"{prefix}_auc": auc}
-    for metric in ("accuracy", "weightedPrecision", "weightedRecall", "f1"):
-        out[f"{prefix}_{metric}"] = multi.setMetricName(metric).evaluate(preds)
-    return out
+    reference :836-862).
+
+    ``df`` is transformed once and the prediction frame is cached for
+    the two reads below: ``BinaryClassificationEvaluator`` for AUC, and
+    one ``(label, prediction)`` count aggregate (at most k² rows) for
+    the multiclass metrics. The aggregate applies the formulas of
+    Spark's ``MulticlassMetrics`` (a class never predicted has
+    precision 0), so every value equals ``MulticlassClassificationEvaluator``
+    on the same predictions to within float rounding (1e-9).
+    """
+    preds = model.transform(df).select("label", "rawPrediction", "prediction").cache()
+    try:
+        counts = preds.groupBy("label", "prediction").count().collect()
+        auc = BinaryClassificationEvaluator(
+            labelCol="label", rawPredictionCol="rawPrediction", metricName="areaUnderROC"
+        ).evaluate(preds)
+    finally:
+        preds.unpersist()
+    return {f"{prefix}_auc": auc} | {
+        f"{prefix}_{k}": v for k, v in _multiclass_metrics(counts).items()
+    }
+
+
+def _multiclass_metrics(counts) -> dict[str, float]:
+    """Accuracy and label-weighted precision/recall/F1 from
+    ``(label, prediction, count)`` rows, in the order of operations of
+    Spark's ``MulticlassMetrics``."""
+    n_label, n_pred, tp = defaultdict(float), defaultdict(float), defaultdict(float)
+    for r in counts:
+        label, pred, n = float(r["label"]), float(r["prediction"]), float(r["count"])
+        n_label[label] += n
+        n_pred[pred] += n
+        tp[label] += n if label == pred else 0.0
+    total = sum(n_label.values())
+
+    def precision(c: float) -> float:
+        return tp[c] / n_pred[c] if n_pred[c] else 0.0
+
+    def recall(c: float) -> float:
+        return tp[c] / n_label[c]
+
+    def f1(c: float) -> float:
+        p, r = precision(c), recall(c)
+        return 0.0 if p + r == 0 else 2.0 * p * r / (p + r)
+
+    def weighted(metric) -> float:
+        return sum(metric(c) * n / total for c, n in n_label.items())
+
+    return {
+        "accuracy": sum(tp.values()) / total,
+        "weightedPrecision": weighted(precision),
+        "weightedRecall": weighted(recall),
+        "f1": weighted(f1),
+    }
 
 
 def train_models(train: DataFrame, test: DataFrame) -> list[FitResult]:
     """Fit the reference's three classifiers (M7-M9) and evaluate on
-    train and test (M10-M12)."""
+    train and test (M10-M12).
+
+    The three fits run concurrently, one thread per estimator, as Spark
+    ML tuning's ``parallelism`` does. They are independent and seeded,
+    so models and metrics equal those of sequential fits, while the
+    LR/RF fits and every evaluation overlap GBT's long chain of small
+    jobs. Each thread inherits the caller's Spark local properties (job
+    group, scheduler pool, span tags) and session job tags, so every
+    job is attributed as if the caller had run it. Results keep the
+    order ``[logistic_regression, random_forest, gbt]``; an exception
+    from any fit is raised here once all three threads have finished.
+    Metrics are those of :func:`evaluate_model`.
+    """
     specs = [
         ("logistic_regression", LogisticRegression(maxIter=10, regParam=0.01)),  # :805
         ("random_forest", RandomForestClassifier(numTrees=50, seed=SEED)),  # :873
         ("gbt", GBTClassifier(seed=SEED)),  # :941
     ]
-    results = []
-    for name, est in specs:
+
+    def fit(name: str, est) -> FitResult:
         model = est.fit(train)
         metrics = evaluate_model(model, train, "train") | evaluate_model(model, test, "test")
-        results.append(FitResult(name=name, model=model, metrics=metrics))
-    return results
+        return FitResult(name=name, model=model, metrics=metrics)
+
+    in_caller_context = inheritable_thread_target(train.sparkSession)(fit)
+    with ThreadPoolExecutor(max_workers=len(specs)) as pool:
+        futures = [pool.submit(in_caller_context, name, est) for name, est in specs]
+    return [f.result() for f in futures]
 
 
 def feature_importances(model, feature_names: list[str]) -> list[tuple[str, float]]:

@@ -230,7 +230,7 @@ def build_basetable(
     then left joins for tip/review/checkin (missing -> null -> repair).
     Null repair: checkin recencies filled with the computed max recency
     kept distributed (``:668-669`` collects; §4.3 fix), then global
-    0-fill (``:677``).
+    0-fill (``:677``) and "Missing" for string gaps.
     """
     b = clean_business(business)
     rm = review_metrics(review).withColumnRenamed("business_ID", "business_id")
@@ -261,5 +261,8 @@ def build_basetable(
         F.coalesce(F.col("max_checkin_recency"), F.col("max_checkin_recency_fill")),
     ).drop("max_checkin_recency_fill")
 
-    # global 0-fill for remaining numeric gaps (:677)
-    return base.na.fill(0)
+    # global 0-fill for remaining numeric gaps (:677); string gaps (an
+    # all-null attributes row leaves attributes_RestaurantsPriceRange2
+    # null) take the bool attributes' "Missing", since a null string
+    # stops RFormula's string indexing
+    return base.na.fill(0).na.fill("Missing")

@@ -30,12 +30,17 @@ _CONV = "purchase"  # the converting event type
 
 def _markov_sql() -> str:
     """Unrolled-iteration DuckDB twin: mass table at (variant, state)
-    grain per iteration, conversion mass accumulated separately."""
+    grain per iteration, conversion mass accumulated separately.
+
+    Each ``it{k}`` is read twice by level k+1 (by ``it{k+1}`` and
+    ``cv{k+1}``); inlined, DuckDB re-expands the whole chain below every
+    reference, so the work grows with each level. MATERIALIZED computes
+    each level once."""
     its = []
     for k in range(1, _MK_ITERS + 1):
         prev = f"it{k - 1}"
         its.append(
-            f"""it{k} AS (
+            f"""it{k} AS MATERIALIZED (
         SELECT m.ch, e.dst AS state,
                CAST(sum(CAST(round(m.mass_u * e.p_u / 1000000.0) AS BIGINT))
                     AS BIGINT) AS mass_u

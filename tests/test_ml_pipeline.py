@@ -11,8 +11,13 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.ml.evaluation import (
+    BinaryClassificationEvaluator,
+    MulticlassClassificationEvaluator,
+)
 from pyspark.sql import functions as F
 
+from big_data_tools_spark.ml import pipeline
 from big_data_tools_spark.ml.pipeline import featurize, train_models
 
 
@@ -89,6 +94,83 @@ def test_parity_table_bands(parity_basetable):
     for name in ("logistic_regression", "random_forest", "gbt"):
         assert results[name]["test_auc"] >= 0.93, (name, results[name])
         assert results[name]["test_f1"] >= 0.93, (name, results[name])
+
+
+@pytest.fixture(scope="module")
+def middle_class_fits(spark):
+    """``train_models`` run under the job group "g" on a table whose
+    positives (1 in 13) sit in the middle of ``review_count``: no linear
+    model separates them, so logistic regression predicts one class
+    only, while the trees predict both. Returns (train, test, results,
+    job ids in "g", job ids started outside any group)."""
+    df = spark.range(390).select(
+        F.concat(F.lit("b"), F.col("id")).alias("business_id"),
+        (F.col("id") % 13).cast("double").alias("review_count"),
+        ((F.col("id") * 37) % 100).cast("double").alias("tip_count"),
+        F.when(F.col("id") % 2 == 0, "IL").otherwise("IN").alias("state"),
+        (F.col("id") % 13 == 6).cast("int").alias("label"),
+    )
+    train, test, _ = featurize(df, select_percentile=None)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("g", "train_models job attribution")
+    try:
+        results = train_models(train, test)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    ungrouped = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+    return train, test, results, set(tracker.getJobIdsForGroup("g")), ungrouped
+
+
+def test_metrics_equal_spark_evaluators(middle_class_fits):
+    """Every metric equals Spark's own evaluators on the same
+    predictions, including a model that never predicts the positive
+    class (its precision for that class has a zero denominator)."""
+    train, test, results, _, _ = middle_class_fits
+    assert [r.name for r in results] == ["logistic_regression", "random_forest", "gbt"]
+    auc = BinaryClassificationEvaluator(
+        labelCol="label", rawPredictionCol="rawPrediction", metricName="areaUnderROC")
+    multi = MulticlassClassificationEvaluator(labelCol="label", predictionCol="prediction")
+    one_class = []
+    for r in results:
+        for prefix, df in (("train", train), ("test", test)):
+            preds = r.model.transform(df)
+            want = {"auc": auc.evaluate(preds)} | {
+                m: multi.setMetricName(m).evaluate(preds)
+                for m in ("accuracy", "weightedPrecision", "weightedRecall", "f1")}
+            assert set(r.metrics) >= {f"{prefix}_{m}" for m in want}
+            for m, v in want.items():
+                assert abs(r.metrics[f"{prefix}_{m}"] - v) <= 1e-9, (r.name, prefix, m)
+            if preds.select("prediction").distinct().count() == 1:
+                one_class.append((r.name, prefix))
+    assert ("logistic_regression", "test") in one_class, one_class
+    assert len(one_class) < 6, "the trees must predict both classes"
+
+
+def test_concurrent_fits_keep_callers_job_group(middle_class_fits):
+    """The fit threads inherit the caller's local properties: every job
+    ``train_models`` starts is listed under the caller's job group (the
+    attribution per-fit job counts rely on), none outside it."""
+    *_, grouped, ungrouped = middle_class_fits
+    assert len(grouped) > 3 * 2, "each fit and each evaluation runs jobs"
+    assert not ungrouped, sorted(ungrouped)
+
+
+def test_failed_fit_propagates(basetable, monkeypatch):
+    """An exception in one estimator's fit thread is raised by
+    ``train_models``, not swallowed by the thread pool."""
+
+    class FailingGBT(pipeline.GBTClassifier):
+        def _fit(self, dataset):
+            raise RuntimeError("gbt fit failed")
+
+    monkeypatch.setattr(pipeline, "GBTClassifier", FailingGBT)
+    train, test, _ = featurize(basetable, select_percentile=None)
+    with pytest.raises(RuntimeError, match="gbt fit failed"):
+        train_models(train, test)
 
 
 def test_feature_importance_query(spark, sf_smoke):

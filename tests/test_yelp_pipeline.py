@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pytest
 
+from big_data_tools_spark.ml import featurize
 from big_data_tools_spark.pipeline.yelp import (
     build_basetable,
     checkin_metrics,
@@ -121,3 +122,22 @@ def test_basetable_grain_and_repair(tables):
     assert by["b4"]["max_checkin_recency"] == by["b3"]["max_checkin_recency"]
     # one row per business (grain invariant, reference :296)
     assert len(ids) == len(set(ids))
+
+
+def test_all_null_attribute_business_featurizes(spark, tables):
+    """A food business whose attributes are all null (b3) keeps no null
+    string in the basetable: its missing price range becomes "Missing"
+    (the bool attributes' default), so RFormula's string indexing takes
+    it. Four copies of the basetable rows, with b1 in a second price
+    range, put both ranges and b3 on the train side of the split."""
+    bt = build_basetable(**tables).select(
+        "business_id", "label", "state", "attributes_RestaurantsPriceRange2", "n_reviews")
+    rows = [r.asDict() for r in bt.collect()]
+    assert _by_id(rows)["b3"]["attributes_RestaurantsPriceRange2"] == "Missing"
+    copies = spark.createDataFrame([
+        r | {"business_id": f"{r['business_id']}_{i}",
+             "attributes_RestaurantsPriceRange2":
+                 "1" if r["business_id"] == "b1" else r["attributes_RestaurantsPriceRange2"]}
+        for r in rows for i in range(4)], bt.schema)
+    train, test, _ = featurize(copies, select_percentile=None)
+    assert len(train.collect()) + len(test.collect()) == len(rows) * 4
