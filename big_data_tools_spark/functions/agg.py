@@ -12,7 +12,11 @@ Policy:
 - computed per-row doubles (ratios, products): both engines produce
   bit-identical per-row values (same IEEE ops on the same inputs), so
   quantize per row with round(x, 6), lift into DECIMAL(28,8), sum
-  exactly, and divide by the count at the end.
+  exactly, and divide by the count at the end;
+- ``dsum`` rounds its exact sum while it is still DECIMAL, then casts
+  to DOUBLE: both engines round a DECIMAL half away from zero, while a
+  DOUBLE half-cent (1.005 is 1.00499... in binary) rounds up in Spark
+  and down in DuckDB.
 
 Each Spark helper has a ``sql_*`` twin that renders the equivalent
 DuckDB expression so query and oracle cannot drift.
@@ -40,9 +44,10 @@ def money_avg(col: Column, digits: int = 2) -> Column:
 
 def dsum(col: Column, digits: int = 2, row_scale: int = 6) -> Column:
     """Order-independent sum of computed doubles via per-row
-    quantization to ``row_scale`` decimals + exact decimal sum."""
+    quantization to ``row_scale`` decimals + exact decimal sum,
+    rounded to ``digits`` before the cast to double."""
     q = F.round(col, row_scale).cast("decimal(28,8)")
-    return F.round(F.sum(q).cast("double"), digits)
+    return F.round(F.sum(q), digits).cast("double")
 
 
 def dmean(col: Column, digits: int = 2, row_scale: int = 6) -> Column:
@@ -59,7 +64,8 @@ def dmean(col: Column, digits: int = 2, row_scale: int = 6) -> Column:
 # -0.0), and the driver hash distinguishes -0.0 from 0.0 (the r8
 # corpus_heaps_beta FAIL). `x + 0.0` is the IEEE identity for every
 # value except -0.0 -> +0.0, so this reproduces Spark's semantics
-# exactly with a one-sided, no-op-for-nonzero edit.
+# exactly with a one-sided, no-op-for-nonzero edit. sql_dsum needs no
+# `+ 0.0`: it rounds a DECIMAL, which has no signed zero.
 
 def sql_money_sum(x: str, digits: int = 2) -> str:
     return f"(round(CAST(sum(CAST({x} AS DECIMAL(18,2))) AS DOUBLE), {digits}) + 0.0)"
@@ -74,8 +80,8 @@ def sql_money_avg(x: str, digits: int = 2) -> str:
 
 def sql_dsum(x: str, digits: int = 2, row_scale: int = 6) -> str:
     return (
-        f"(round(CAST(sum(CAST(round({x}, {row_scale}) AS DECIMAL(28,8))) AS DOUBLE), {digits})"
-        " + 0.0)"
+        f"CAST(round(sum(CAST(round({x}, {row_scale}) AS DECIMAL(28,8))), {digits})"
+        " AS DOUBLE)"
     )
 
 

@@ -7,9 +7,9 @@ lazy, so the operator cannot unpersist before the caller's action runs
 — Spark's CacheManager would drop the blocks and the plan would
 recompute from scratch. Instead the operator tags the result with the
 frames it persisted (``track_cache``) and the CALLER releases them
-after its terminal action (``release_caches``). bench.py and the test
-fixtures do this between queries so back-to-back registry runs don't
-accumulate cached partitions across a shared session.
+after its terminal action (``release_caches``). perfbench, the oracle
+compare and the test fixtures do this between queries so back-to-back
+registry runs don't accumulate cached partitions across a shared session.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ _ATTR = "_bdt_cached_frames"
 # objects, so any wrapper transformation (.select/.join/.groupBy)
 # silently drops them — a query that post-processes a tagged operator
 # result returns an untagged frame and release_caches() on it frees
-# nothing. Harness code (bench.py, the oracle compare, test fixtures)
+# nothing. Harness code (perfbench, the oracle compare, test fixtures)
 # therefore calls release_all_caches() between queries, which frees
 # everything regardless of tag propagation. WeakSet so the registry
 # never keeps frames alive by itself.
@@ -61,7 +61,7 @@ def release_caches(df: DataFrame) -> None:
 def release_all_caches() -> None:
     """Unpersist every frame any operator has tagged this session AND
     sweep the JVM's persistent-RDD registry. The between-queries sweep
-    for harness loops (bench, oracle compare): frees persisted
+    for harness loops (perfbench, oracle compare): frees persisted
     intermediates even when (a) a query's wrapper transformations
     dropped the per-frame tag, or (b) the storage belongs to a
     ``localCheckpoint`` (fixpoint loops), whose blocks are unreachable

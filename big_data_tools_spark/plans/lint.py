@@ -94,10 +94,11 @@ def _strip_sql_comments(sql: str) -> str:
     return re.sub(r"--[^\n]*", "", sql)
 
 
-def _sum_args(sql: str) -> list[str]:
-    """Argument text of every sum(...)/avg(...) call (paren-balanced)."""
+def _calls(sql: str, funcs: str) -> list[tuple[int, str, int]]:
+    """(start, argument text, end) of every call to one of the
+    ``|``-separated ``funcs`` (paren-balanced)."""
     out = []
-    for m in re.finditer(r"(?<![a-z_0-9])(sum|avg)\s*\(", sql, re.I):
+    for m in re.finditer(rf"(?<![a-z_0-9])({funcs})\s*\(", sql, re.I):
         depth, i = 1, m.end()
         while i < len(sql) and depth:
             if sql[i] == "(":
@@ -105,8 +106,13 @@ def _sum_args(sql: str) -> list[str]:
             elif sql[i] == ")":
                 depth -= 1
             i += 1
-        out.append(sql[m.end() : i - 1])
+        out.append((m.start(), sql[m.end() : i - 1], i))
     return out
+
+
+def _sum_args(sql: str) -> list[str]:
+    """Argument text of every sum(...)/avg(...) call."""
+    return [arg for _, arg, _ in _calls(sql, "sum|avg")]
 
 
 # --------------------------------------------------------------- r9
@@ -137,17 +143,27 @@ _SIGNED_BASE_COLS = re.compile(
 
 def _round_calls(sql: str) -> list[tuple[str, str]]:
     """(argument text, trailing text) of every round(...) call."""
-    out = []
-    for m in re.finditer(r"(?<![a-z_0-9])round\s*\(", sql, re.I):
-        depth, i = 1, m.end()
-        while i < len(sql) and depth:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
-        out.append((sql[m.end() : i - 1], sql[i : i + 64]))
-    return out
+    return [(arg, sql[end : end + 64]) for _, arg, end in _calls(sql, "round")]
+
+
+def _whole_call_arg(expr: str, func: str) -> str | None:
+    """Argument text when ``expr`` is exactly one ``func(...)`` call."""
+    expr = expr.strip()
+    calls = _calls(expr, func)
+    if calls and calls[0][0] == 0 and calls[0][2] == len(expr):
+        return calls[0][1]
+    return None
+
+
+def _is_decimal(expr: str) -> bool:
+    """True for CAST(... AS DECIMAL(p,s)) or a sum over one. A DECIMAL
+    has no signed zero, so neither does a round of it (the sql_dsum
+    form: round the exact sum, then cast to DOUBLE)."""
+    summed = _whole_call_arg(expr, "sum")
+    cast = _whole_call_arg(expr if summed is None else summed, "cast")
+    return cast is not None and bool(
+        re.search(r"\bAS\s+DECIMAL\s*(\(\s*\d+\s*,\s*\d+\s*\))?\s*$", cast, re.I)
+    )
 
 
 def _terminal_signed_round_problems(name: str, body: str) -> list[str]:
@@ -163,6 +179,8 @@ def _terminal_signed_round_problems(name: str, body: str) -> list[str]:
             continue  # not emitted as a double column
         if "-" not in arg and not _SIGNED_BASE_COLS.search(arg):
             continue  # argument cannot be negative
+        if _is_decimal(re.sub(r",\s*\d+\s*$", "", arg)):  # drop the digits
+            continue  # DECIMAL round: no signed zero to normalize
         problems.append(
             f"{name}: terminal round(...) AS {alias.group(1)} over a "
             "possibly-negative double without `+ 0.0` normalization — "

@@ -23,8 +23,9 @@ from ..io.sources import load_table
 from .registry import register
 
 # per-query scratch roots, REUSED across invocations in one process:
-# bench's 2-warm + 3-timed reruns overwrite one directory instead of
-# accumulating five copies of orders in /tmp (r10 ADVICE), and atexit
+# repeated runs in one process (the test suite, profile_query's
+# 2-warm + 3-timed reruns) overwrite one directory instead of
+# accumulating a copy of orders in /tmp per run (r10 ADVICE), and atexit
 # removes them at interpreter exit. The returned DataFrame must stay
 # readable until the caller collects, so cleanup-in-finally is not an
 # option; the next invocation (or exit) is the correct release point.

@@ -149,8 +149,7 @@ def get_spark(
         # caller can flip them back per query via spark.conf.set.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_MAX", "67108864"),
+            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "67108864"
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.maxResultSize", "2g")

@@ -9,6 +9,10 @@ out of the registry permanently.
 
 from __future__ import annotations
 
+import duckdb
+import pytest
+
+from big_data_tools_spark.functions.agg import dsum, sql_dsum
 from big_data_tools_spark.plans.lint import lint_all_twins, lint_twin_sql
 
 
@@ -41,6 +45,23 @@ def test_lint_accepts_quantized_forms():
         "SELECT round(sqrt(x), 6) FROM t",
         # transcendental mentioned only in a comment
         "SELECT a -- ln(x) explained here\nFROM t",
+        # round of an exact DECIMAL sum has no signed zero (sql_dsum)
+        "SELECT CAST(round(sum(CAST(round(a - b, 6) AS DECIMAL(28,8))), 2)"
+        " AS DOUBLE) AS v FROM t",
     ]
     for sql in ok:
         assert lint_twin_sql("demo", sql) == [], sql
+
+
+@pytest.mark.parametrize("rows,expected", [((1.0, 0.005), 1.01), ((-1.0, -0.005), -1.01)])
+def test_dsum_half_cent_matches_duckdb(spark, rows, expected):
+    # 1.005 is 1.00499... as a double: rounding the DOUBLE sum gives
+    # 1.01 in Spark but 1.0 in DuckDB; rounding the DECIMAL sum gives
+    # 1.01 (half away from zero) in both
+    df = spark.createDataFrame([(x,) for x in rows], "x double")
+    got_spark = df.agg(dsum(df.x).alias("v")).first()["v"]
+    values = ", ".join(f"({x}::DOUBLE)" for x in rows)
+    got_duckdb = duckdb.connect().execute(
+        f"SELECT {sql_dsum('x')} AS v FROM (VALUES {values}) t(x)"
+    ).fetchone()[0]
+    assert got_spark == got_duckdb == expected

@@ -7,7 +7,7 @@ by fixed costs at small SF) across 100x is structurally sound for the
 next 100x; superlinear growth flags a plan that would not survive.
 Writes the table into SCALING.md between the BENCH-SCALING markers.
 
-Run: python tools/bench_scaling.py   (after bench.py, not concurrently)
+Run: python tools/bench_scaling.py   (alone: concurrent jobs skew the walls)
 """
 
 from __future__ import annotations
@@ -177,19 +177,8 @@ def main() -> None:
             f"| {name} | {t1:.2f}s | {t2:.2f}s | {t3:.2f}s | x{g:.1f} |"
         )
     lines += ["", MARK_B]
-    block = "\n".join(lines)
-
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "SCALING.md")
-    text = open(path).read()
-    if MARK_A in text:
-        text = re.sub(
-            re.escape(MARK_A) + ".*?" + re.escape(MARK_B), block, text, flags=re.S
-        )
-    else:
-        text = text.rstrip() + "\n\n## Measured scaling (sf0.001 -> sf0.1)\n\n" + block + "\n"
-    open(path, "w").write(text)
-    print(f"wrote scaling table into {path}")
+    _splice(MARK_A, MARK_B, "\n".join(lines),
+            "## Measured scaling (sf0.001 -> sf0.1)")
 
 
 def sf1_one(name: str) -> None:
@@ -220,27 +209,12 @@ def sf1_one(name: str) -> None:
 def main_sf1() -> None:
     """Best-of-2 at the sf1 decade, one subprocess per query; writes a
     second marker block so the sf0.001->0.1 table stays comparable
-    across rounds. Since round 6 the block records the bench.py
-    machine-speed canary measured in its own fresh process right
-    before the sweep, so cross-round comparisons of these absolute
-    walls can be normalized for box load (r5 VERDICT ask #10)."""
+    across rounds."""
     import json as _json
     import subprocess
 
     if not os.path.isdir(SF1_DIR):
         sys.exit(f"{SF1_DIR} missing — run tools/gen_sf1.py first")
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--canary-one"],
-        capture_output=True, text=True,
-    )
-    if proc.returncode != 0:
-        # ADVICE r6: mirror the per-query failure handling — a failed
-        # canary child otherwise crashes the sweep with an opaque
-        # IndexError/JSONDecodeError instead of a diagnostic
-        print(f"# canary child FAILED\n{proc.stderr[-2000:]}", file=sys.stderr)
-        sys.exit(1)
-    canary = _json.loads(proc.stdout.strip().splitlines()[-1])["canary_sec"]
-    print(f"# canary: {canary:.3f}s", file=sys.stderr)
     rows = []
     for name in SF1_QUERIES:
         proc = subprocess.run(
@@ -260,10 +234,6 @@ def main_sf1() -> None:
     lines = [
         MARK_SF1_A,
         "",
-        f"Machine-speed canary for this run: {canary:.3f}s",
-        "(bench.py run_canary in a fresh process; compare rounds as",
-        "query_sec / canary_sec, not as raw walls).",
-        "",
         "The next decade: best-of-2 wall-clock for the heaviest bench",
         "queries at sf0.01 / sf0.1 / sf1 (sf1 = 10x key-remapped",
         "replication of sf0.1, ~6M lineitem rows, with per-copy word",
@@ -281,21 +251,8 @@ def main_sf1() -> None:
             f"| {name} | {t1:.2f}s | {t2:.2f}s | {t3:.2f}s | x{g:.1f} |"
         )
     lines += ["", MARK_SF1_B]
-    block = "\n".join(lines)
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "SCALING.md")
-    text = open(path).read()
-    if MARK_SF1_A in text:
-        text = re.sub(
-            re.escape(MARK_SF1_A) + ".*?" + re.escape(MARK_SF1_B),
-            block, text, flags=re.S,
-        )
-    else:
-        text = (text.rstrip()
-                + "\n\n## Measured scaling, next decade (sf0.01 -> sf1)\n\n"
-                + block + "\n")
-    open(path, "w").write(text)
-    print(f"wrote sf1 scaling table into {path}")
+    _splice(MARK_SF1_A, MARK_SF1_B, "\n".join(lines),
+            "## Measured scaling, next decade (sf0.01 -> sf1)")
 
 
 # --sf3 mode (r5 VERDICT ask #6): one more confirmation step for the
@@ -486,22 +443,8 @@ def _splice(mark_a: str, mark_b: str, block: str, heading: str) -> None:
     print(f"wrote block into {path}")
 
 
-def canary_one() -> None:
-    import json as _json
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    import bench
-
-    spark = get_spark(app_name="bdt-scaling-canary")
-    # run_canary returns (median, samples) since r9 (median-of-5)
-    canary_sec, canary_samples = bench.run_canary(spark)
-    print(_json.dumps({"canary_sec": canary_sec, "canary_samples": canary_samples}))
-
-
 if __name__ == "__main__":
-    if "--canary-one" in sys.argv:
-        canary_one()
-    elif "--sf1-one" in sys.argv:
+    if "--sf1-one" in sys.argv:
         sf1_one(sys.argv[sys.argv.index("--sf1-one") + 1])
     elif "--with-sf1" in sys.argv:
         main_sf1()

@@ -3,13 +3,14 @@
 the measurement tool behind the r12 32-core-inversion diagnosis
 (VERDICT r11 "what's wrong" #3).
 
-Runs the query exactly the way bench.py does (2 warm + best-of-3,
-caches released), with the Spark event log enabled, then parses the
-event log into a per-stage table: stage id, name, task count, wall
-(submission->completion), sum of task run times, GC time, shuffle
-read/write bytes. Inversions show up as either (a) many tiny tasks
-whose scheduling/launch overhead dominates at high core counts, or
-(b) per-task costs that grow with concurrency (GC, memory pressure).
+Runs the query 2 warm + best-of-3 with caches released between runs
+(as perfbench and the oracle compare release them), with the Spark
+event log enabled, then parses the event log into a per-stage table:
+stage id, name, task count, wall (submission->completion), sum of task
+run times, GC time, shuffle read/write bytes. Inversions show up as
+either (a) many tiny tasks whose scheduling/launch overhead dominates
+at high core counts, or (b) per-task costs that grow with concurrency
+(GC, memory pressure).
 
 Usage:
     SPARK_GRAFT_CPUS=32 python tools/profile_query.py events_rolling_dau
