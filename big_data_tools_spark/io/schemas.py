@@ -17,6 +17,9 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------- driver tables
+# What load_table returns for the driver testdata (pinned in
+# tests/test_sources_memo.py): the date columns are naive timestamp[us]
+# in the files, which Spark infers as TIMESTAMP_NTZ.
 
 TABLE_SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
@@ -65,7 +68,7 @@ TABLE_SCHEMAS: dict[str, T.StructType] = {
             T.StructField("o_custkey", T.LongType()),
             T.StructField("o_orderstatus", T.StringType()),
             T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
+            T.StructField("o_orderdate", T.TimestampNTZType()),
             T.StructField("o_orderpriority", T.StringType()),
         ]
     ),
@@ -81,7 +84,7 @@ TABLE_SCHEMAS: dict[str, T.StructType] = {
             T.StructField("l_tax", T.DoubleType()),
             T.StructField("l_returnflag", T.StringType()),
             T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
+            T.StructField("l_shipdate", T.TimestampNTZType()),
         ]
     ),
     "events": T.StructType(

@@ -12,6 +12,7 @@ scan at 100 TB); Parquet is the canonical format for driver testdata.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,12 +23,67 @@ from .schemas import TABLE_SCHEMAS
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# Spark's inferred schema of each parquet file read by load_table, keyed
+# on the path and validated against the file's size, mtime and the confs
+# that steer inference; it outlives sessions (a StructType is plain data).
+# Concurrent misses on one file each infer and store the same schema.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+_INFER_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+
+def _read_parquet(
+    spark: SparkSession, path: str, infer_conf: dict[str, str] | None = None
+) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the file's schema once.
+
+    Inference launches a Spark job per read (a short query spent as long
+    building its DataFrame as running it). The first read of a local
+    file infers as usual, with ``infer_conf`` set for the inference
+    only; later reads of the same unchanged file pass the memoised
+    schema and plan without a job. It is Spark's own inference, not a
+    declared schema, so types and failures are those of a plain read.
+    Paths that are not local regular files are inferred every time.
+    """
+    infer_conf = infer_conf or {}
+    stamp = None
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is not None and stat.S_ISREG(st.st_mode):
+        confs = tuple(infer_conf.get(k) or spark.conf.get(k) for k in _INFER_CONFS)
+        stamp = (st.st_size, st.st_mtime_ns, confs)
+        hit = _SCHEMAS.get(path)
+        if hit is not None and hit[0] == stamp:
+            return spark.read.schema(hit[1]).parquet(path)
+    prev = {k: spark.conf.get(k, None) for k in infer_conf}
+    for k, v in infer_conf.items():
+        spark.conf.set(k, v)
+    try:
+        df = spark.read.parquet(path)
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    if stamp is not None:
+        _SCHEMAS[path] = (stamp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver testdata table from ``{sf_dir}/{name}.parquet``.
 
-    Parquet is self-describing so no schema arg is needed; the declared
-    schema in :mod:`schemas` documents the contract and is asserted in
-    tests.
+    Parquet is self-describing, so the schema is Spark's inference
+    (memoised per file by :func:`_read_parquet`); the declared schema
+    in :mod:`schemas` documents it, and tests/test_sources_memo.py
+    asserts the two agree on the driver testdata.
 
     The events table stores ``ts`` as TIMESTAMP(NANOS), which Spark's
     parquet reader rejects; we read nanos as long (runtime legacy conf)
@@ -35,43 +91,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     truncated like DuckDB's ns->us conversion, so oracle checks agree.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        # Parquet TIMESTAMP(isAdjustedToUTC=false) would otherwise infer as
-        # TIMESTAMP_NTZ (Spark >=3.4 default), which cannot be epoch-cast and
-        # whose downstream date_trunc/window semantics depend on nothing we
-        # can pin. Reading it as LTZ treats the stored int64 micros as UTC
-        # instants — session-timezone-independent, and exactly how DuckDB's
-        # epoch() sees the same file. The NTZ-inference conf is SCOPED
-        # to this read (schema inference happens eagerly at reader
-        # creation) and restored, so other tables' timestamp dtype
-        # never depends on whether events loaded earlier in the
-        # session. nanosAsLong stays sticky — it is consulted at
-        # EXECUTION for TIMESTAMP(NANOS) files, so restoring it would
-        # break later actions on a nanos-format events frame.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        prev_ntz = spark.conf.get(
-            "spark.sql.parquet.inferTimestampNTZ.enabled", None
-        )
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        try:
-            df = spark.read.parquet(path)
-        finally:
-            if prev_ntz is None:
-                spark.conf.unset("spark.sql.parquet.inferTimestampNTZ.enabled")
-            else:
-                spark.conf.set(
-                    "spark.sql.parquet.inferTimestampNTZ.enabled", prev_ntz
-                )
-        dt = dict(df.dtypes).get("ts")
-        if dt == "bigint":
-            # integer div, NOT /1000+cast: nano epochs (~1.7e18) exceed
-            # double's 2^53 mantissa, so float division rounds the µs
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif dt == "timestamp_ntz":
-            # fallback if the conf is ignored; correct under UTC session tz
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+    if name != "events":
+        return _read_parquet(spark, path)
+    # Parquet TIMESTAMP(isAdjustedToUTC=false) would otherwise infer as
+    # TIMESTAMP_NTZ (Spark >=3.4 default), which cannot be epoch-cast and
+    # whose downstream date_trunc/window semantics depend on nothing we
+    # can pin. Reading it as LTZ treats the stored int64 micros as UTC
+    # instants — session-timezone-independent, and exactly how DuckDB's
+    # epoch() sees the same file. The NTZ-inference conf is SCOPED to
+    # the inference, so other tables' timestamp dtype never depends on
+    # whether events loaded earlier in the session. nanosAsLong is what
+    # lets inference accept TIMESTAMP(NANOS) (as bigint). It stays
+    # sticky and is set on every load, hit or miss, so the session's
+    # confs after a load do not depend on the memo.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = _read_parquet(
+        spark, path, {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"}
+    )
+    dt = dict(df.dtypes).get("ts")
+    if dt == "bigint":
+        # integer div, NOT /1000+cast: nano epochs (~1.7e18) exceed
+        # double's 2^53 mantissa, so float division rounds the µs
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif dt == "timestamp_ntz":
+        # fallback if the conf is ignored; correct under UTC session tz
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def load_tables(

@@ -38,25 +38,28 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .cache import track_cache
-from .text import tokens
+from .text import over_tokens
 
 
 def ngram_features(text_col: Column) -> Column:
     """array<string> of unigram + bigram features of the lowercased,
     space-split text. Pure expression; bigrams guarded for 1-token
     docs (``sequence`` would run descending on an empty range)."""
-    toks = tokens(text_col)
-    n = F.size(toks)
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - F.lit(1)),
-            lambda i: F.concat(
-                F.element_at(toks, i), F.lit(" "), F.element_at(toks, i + F.lit(1))
+
+    def features(toks: Column) -> Column:
+        n = F.size(toks)
+        bigrams = F.when(
+            n >= 2,
+            F.transform(
+                F.sequence(F.lit(1), n - F.lit(1)),
+                lambda i: F.concat(
+                    F.element_at(toks, i), F.lit(" "), F.element_at(toks, i + F.lit(1))
+                ),
             ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.concat(toks, bigrams)
+        ).otherwise(F.array().cast("array<string>"))
+        return F.concat(toks, bigrams)
+
+    return over_tokens(text_col, features)
 
 
 def _portable_llr(alpha: float) -> Column:

@@ -13,6 +13,8 @@ to be bit-identical between Spark ``split`` and DuckDB
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -121,17 +123,36 @@ def fingerprint(col: Column) -> Column:
     return F.md5(normalized)
 
 
-def shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as array<string> (empty if fewer
-    than ``n`` tokens)."""
-    t = tokens(col)
-    grams = F.transform(
+def over_tokens(col: Column, fn: Callable[[Column], Column]) -> Column:
+    """``fn(tokens(col))`` with the token array computed once per row.
+
+    A lambda that captures ``tokens(col)`` re-evaluates the split for
+    every element it visits (once per n-gram, O(tokens^2) per doc), and
+    a separate projection does not help because CollapseProject inlines
+    it again. Binding the array as the variable of a one-element
+    ``transform`` evaluates it once."""
+    return F.element_at(F.transform(F.array(tokens(col)), fn), 1)
+
+
+def _word_ngrams(t: Column, n: int) -> Column:
+    """Every n-gram of token array ``t`` in order, space-joined; callers
+    guard ``size(t) < n`` (``sequence`` would then run descending)."""
+    return F.transform(
         F.sequence(F.lit(1), F.size(t) - (n - 1)),
         lambda i: F.concat_ws(" ", F.slice(t, i, n)),
     )
-    return F.when(F.size(t) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
+
+
+def shingles(col: Column, n: int = 3) -> Column:
+    """Distinct word n-gram shingles as array<string> (empty if fewer
+    than ``n`` tokens)."""
+
+    def grams(t: Column) -> Column:
+        return F.when(F.size(t) >= n, F.array_distinct(_word_ngrams(t, n))).otherwise(
+            F.array().cast("array<string>")
+        )
+
+    return over_tokens(col, grams)
 
 
 def repetition_ratio(col: Column, n: int = 3) -> Column:
@@ -140,13 +161,15 @@ def repetition_ratio(col: Column, n: int = 3) -> Column:
     that repeat an earlier n-gram — 1 - distinct/total. 0.0 for docs
     with fewer than ``n`` tokens. Pure expression, no shuffle; feeds
     the same filter tier as :func:`quality_score`."""
-    t = tokens(col)
-    total = F.size(t) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), total), lambda i: F.concat_ws(" ", F.slice(t, i, n))
-    )
-    ratio = F.lit(1.0) - F.size(F.array_distinct(grams)) / total.cast("double")
-    return F.when(total >= 1, ratio).otherwise(F.lit(0.0))
+
+    def ratio(t: Column) -> Column:
+        total = F.size(t) - (n - 1)
+        distinct = F.size(F.array_distinct(_word_ngrams(t, n)))
+        return F.when(
+            total >= 1, F.lit(1.0) - distinct / total.cast("double")
+        ).otherwise(F.lit(0.0))
+
+    return over_tokens(col, ratio)
 
 
 # GPT-style pre-tokenizer shape, restricted to constructs RE2 and Java

@@ -27,7 +27,56 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
-def _scratch_dir() -> str | None:
+_GIB = 1 << 30
+_JVM_UNITS = {"k": 10, "m": 20, "g": 30, "t": 40}
+
+
+def _mem_total() -> int | None:
+    """Host RAM in bytes (``MemTotal`` of /proc/meminfo), None if unreadable."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) << 10
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def _jvm_bytes(mem: str) -> int:
+    """Bytes in a JVM memory size; a bare number is MiB, as in
+    ``spark.driver.memory``."""
+    s = mem.strip().lower().removesuffix("b")
+    if s[-1:] in _JVM_UNITS:
+        return int(float(s[:-1]) * (1 << _JVM_UNITS[s[-1]]))
+    return int(float(s)) << 20
+
+
+def default_driver_mem(mem_total: int | None) -> str:
+    """Default driver heap: half the host's RAM in whole GiB, capped at
+    16g (16g when RAM is unknown). Local mode runs driver and executor
+    threads in one JVM, so this heap is the engine's whole working set;
+    the other half stays for Python workers, the page cache and a RAM
+    tmpfs."""
+    if mem_total is None:
+        return "16g"
+    return f"{max(1, min(16, mem_total // 2 // _GIB))}g"
+
+
+def shm_fits(shm_free: int, mem_total: int | None, driver_mem: str) -> bool:
+    """Whether shuffle scratch may go on the RAM-backed /dev/shm: only
+    with 4 GiB free on the tmpfs AND 4 GiB of RAM left beyond the heap,
+    since tmpfs pages and the heap come out of the same memory. 4 GiB ~
+    the largest local-mode shuffle this repo produces at sf1, with
+    margin."""
+    return (
+        mem_total is not None
+        and shm_free >= 4 * _GIB
+        and mem_total - _jvm_bytes(driver_mem) >= 4 * _GIB
+    )
+
+
+def _scratch_dir(driver_mem: str, mem_total: int | None) -> str | None:
     """Fast local scratch for shuffle files and localCheckpoint spill.
 
     Single-node shuffles write every Exchange to ``spark.local.dir``
@@ -35,26 +84,24 @@ def _scratch_dir() -> str | None:
     that disk's contention swings shuffle-heavy wall-clock 2-4x while
     CPU-bound queries are unaffected — measured live in the r8 bench,
     where untouched shuffle-heavy queries regressed 20-70% against a
-    FASTER cpu canary. A RAM-backed tmpfs (/dev/shm, 126 GiB on this
-    box, sized far above any local-mode spill this repo produces)
-    removes that variance. The cluster-scale analog is standard ops
-    guidance, not a local hack: put spark.local.dir on fast local
-    NVMe, never on a shared/network volume. Overridable (or disabled
-    with an empty value) via $SPARK_GRAFT_LOCAL_DIR."""
+    FASTER cpu canary. A RAM-backed tmpfs (/dev/shm) removes that
+    variance when the host has RAM to spare (:func:`shm_fits`). The
+    cluster-scale analog is standard ops guidance, not a local hack:
+    put spark.local.dir on fast local NVMe, never on a shared/network
+    volume. Overridable (or disabled with an empty value) via
+    $SPARK_GRAFT_LOCAL_DIR."""
     d = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if d is not None:
         return d or None
     if os.path.isdir("/dev/shm"):
-        # Only opt in when the tmpfs actually has headroom: on hosts
-        # where /dev/shm is small (64 MB–50% RAM is common in
+        # on hosts where /dev/shm is small (64 MB–50% RAM is common in
         # containers) shuffle writes would ENOSPC where the /tmp
-        # default succeeds (r8 ADVICE). 4 GiB floor ~ the largest
-        # local-mode shuffle this repo produces at sf1, with margin.
+        # default succeeds (r8 ADVICE)
         try:
             st = os.statvfs("/dev/shm")
-            if st.f_bavail * st.f_frsize < 4 << 30:
-                return None
         except OSError:
+            return None
+        if not shm_fits(st.f_bavail * st.f_frsize, mem_total, driver_mem):
             return None
         d = "/dev/shm/spark-graft-local"
         try:
@@ -120,6 +167,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a local SparkSession with engine defaults."""
     n = cpus or default_parallelism()
+    mem_total = _mem_total()
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(
+        mem_total
+    )
     # local[n,2]: the retry count MUST ride in the master string — under
     # a plain local[n] master Spark hardcodes maxFailures=1
     # (MAX_LOCAL_TASK_FAILURES) and silently ignores the
@@ -175,12 +226,13 @@ def get_spark(
         )
         # local mode: one JVM hosts driver + all executor threads, so the
         # driver heap must be sized for N concurrent tasks (default 1g
-        # OOMs under 32 parallel hash-agg tasks). Must be set before the
-        # JVM launches; getOrCreate on an existing session ignores it.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # OOMs under 32 parallel hash-agg tasks) and for the host
+        # (default_driver_mem). Must be set before the JVM launches;
+        # getOrCreate on an existing session ignores it.
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
     )
-    scratch = _scratch_dir()
+    scratch = _scratch_dir(driver_mem, mem_total)
     if scratch:
         # must be set before the JVM launches (like driver.memory)
         builder = builder.config("spark.local.dir", scratch)

@@ -42,3 +42,26 @@ def test_cached_plan_repartitioning_enabled(spark):
         )
         == "true"
     )
+
+
+def test_host_sized_defaults():
+    from big_data_tools_spark.session import default_driver_mem, shm_fits
+
+    gib = 1 << 30
+    # half of RAM in whole GiB, capped at 16g; 16g when RAM is unknown
+    assert default_driver_mem(16_874_930_176) == "7g"  # MemTotal 16479424 kB
+    assert default_driver_mem(64 * gib) == "16g"
+    assert default_driver_mem(256 * gib) == "16g"
+    assert default_driver_mem(3 * gib) == "1g"
+    assert default_driver_mem(1 * gib) == "1g"
+    assert default_driver_mem(None) == "16g"
+    # /dev/shm needs 4 GiB free on the tmpfs and 4 GiB of RAM beyond the heap
+    assert shm_fits(16 * gib, 16 * gib, "7g")
+    assert shm_fits(4 * gib, 11 * gib, "7g")
+    assert not shm_fits(4 * gib - 1, 64 * gib, "7g")
+    assert not shm_fits(16 * gib, 11 * gib - 1, "7g")
+    assert not shm_fits(16 * gib, 16 * gib, "16g")
+    assert not shm_fits(16 * gib, None, "16g")
+    assert shm_fits(16 * gib, 8 * gib, "4096m")
+    assert not shm_fits(16 * gib, 8 * gib, "4097")  # bare number = MiB
+    assert shm_fits(8 * gib, 8 * gib, "2G")
