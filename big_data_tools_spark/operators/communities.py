@@ -143,14 +143,16 @@ def lpa_trace_sql(edges_cte: str, iterations: int = 5) -> str:
     caller-supplied CTE defining the SYMMETRIZED ``edges(src, dst)``:
     unrolls the synchronous rounds with a row_number argmax (count
     desc, label asc — the same total order max_by encodes) and one
-    delta CTE per round; the caller appends ``SELECT * FROM trace``."""
+    delta CTE per round; the caller appends ``SELECT * FROM trace``.
+    Each round is MATERIALIZED: the next round and its delta both read
+    it, and DuckDB would otherwise re-expand the chain below each read."""
     steps = [
         edges_cte,
-        "l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges)",
+        "l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS label FROM edges)",
     ]
     for i in range(1, iterations + 1):
         steps.append(
-            f"l{i} AS (SELECT node, label FROM ("
+            f"l{i} AS MATERIALIZED (SELECT node, label FROM ("
             f"SELECT e.src AS node, p.label, "
             f"row_number() OVER (PARTITION BY e.src "
             f"ORDER BY count(*) DESC, p.label ASC) AS rn "

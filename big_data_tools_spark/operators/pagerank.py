@@ -186,14 +186,16 @@ def pagerank_iteration_sql(
     """DuckDB twin of :func:`pagerank`: ``iterations`` unrolled CTE
     steps over a caller-supplied CTE body defining ``edges(src, dst,
     p)``. Returns the full WITH-clause prefix ending at ``pr{k}`` —
-    the caller appends its own final SELECT."""
+    the caller appends its own final SELECT. Each step is MATERIALIZED:
+    the trace reads every ``pr{k}`` twice, and DuckDB would otherwise
+    re-expand the chain below each read."""
     steps = [
         edges_cte,
-        "pr0 AS (SELECT DISTINCT src AS node, CAST(1.0 AS DOUBLE) AS rank FROM edges)",
+        "pr0 AS MATERIALIZED (SELECT DISTINCT src AS node, CAST(1.0 AS DOUBLE) AS rank FROM edges)",
     ]
     for i in range(iterations):
         steps.append(
-            f"pr{i + 1} AS (SELECT e.dst AS node, "
+            f"pr{i + 1} AS MATERIALIZED (SELECT e.dst AS node, "
             f"{1.0 - DAMPING} + {DAMPING} * "
             f"(CAST(sum(CAST(floor(r.rank * e.p * {float(_QUANT)}) AS BIGINT)) "
             f"AS DOUBLE) / {float(_QUANT)}) AS rank "

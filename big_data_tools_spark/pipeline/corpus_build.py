@@ -117,7 +117,7 @@ def build_corpus(
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("n_tok").cast("bigint").alias("total_tokens"),
-            dmean(F.col("quality"), 3).alias("avg_quality"),
+            dmean("quality", 3).alias("avg_quality"),
         )
         .collect()
     }

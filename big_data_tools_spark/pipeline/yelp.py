@@ -22,12 +22,12 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.cleaning import recode_bulk
 from ..operators.hours import parse_hours_range
-from ..operators.maps import parse_dict_literal
+from ..operators.maps import parse_dict_literal, pivot_dummies
 from ..operators.scalar import with_global_agg, with_global_max
 from ..operators.star import star_join
 
@@ -139,19 +139,32 @@ def food_filter(df: DataFrame) -> DataFrame:
     return df.filter(cond)
 
 
-def _map_dummies(df: DataFrame, col: str) -> DataFrame:
-    """One dict-literal attribute -> per-business 0/1 dummy block
-    (reference's 4x repeated explode-pivot-join ``:310-347`` etc. as a
-    single parameterized op; SURVEY.md §4.3). Keeps the reference's
-    leading-space " True" filter semantics (``:336``)."""
-    prefix = col.rsplit("_", 1)[-1]
-    entries = df.select(
-        "business_id", F.explode(parse_dict_literal(F.col(col))).alias("key", "value")
-    )
-    kept = entries.filter(F.col("value") == " True").withColumn(
-        "key", F.concat(F.lit(f"{prefix}_"), F.trim(F.col("key")))
-    )
-    return kept.groupBy("business_id").pivot("key").agg(F.lit(1))
+def _true_names(col: str) -> Column:
+    """Dummy names (``Ambience_romantic``) of one row's " True" entries
+    of a dict-literal attribute (reference ``:336``)."""
+    prefix = col.rsplit("_", 1)[-1] + "_"
+    entries = F.filter(F.map_entries(parse_dict_literal(F.col(col))),
+                       lambda e: e["value"] == " True")
+    return F.transform(entries, lambda e: F.concat(F.lit(prefix), F.trim(e["key"])))
+
+
+def _map_dummy_blocks(df: DataFrame, cols: list[str]) -> list[DataFrame]:
+    """Dict-literal attributes -> per-business 0/1 dummy blocks
+    (reference's 4x repeated explode-pivot-join ``:310-347`` etc.;
+    SURVEY.md §4.3). One aggregate finds every block's sorted dummy
+    names, so each pivot gets its value list and runs no job of its
+    own; a block with no " True" entry adds no column."""
+    if not cols:
+        return []
+    names = df.agg(*[
+        F.array_sort(F.array_distinct(F.flatten(F.collect_set(_true_names(c)))))
+        for c in cols
+    ]).first()
+    return [
+        pivot_dummies(df.select("business_id", F.explode(_true_names(c)).alias("key")),
+                      "business_id", "key", list(values))
+        for c, values in zip(cols, names) if values
+    ]
 
 
 def clean_business(business: DataFrame) -> DataFrame:
@@ -177,9 +190,7 @@ def clean_business(business: DataFrame) -> DataFrame:
         flat = recode_bulk(flat, ["attributes_Alcohol"], alcohol_map, default="Missing")
 
     # dict-literal attrs -> dummy blocks, left-joined back (:310-464)
-    dummy_blocks = [
-        _map_dummies(flat, c) for c in MAP_ATTR_COLS if c in flat.columns
-    ]
+    dummy_blocks = _map_dummy_blocks(flat, [c for c in MAP_ATTR_COLS if c in flat.columns])
     out = star_join(flat, [(b, "business_id", "left") for b in dummy_blocks])
     out = out.drop(*[c for c in MAP_ATTR_COLS if c in out.columns])
 

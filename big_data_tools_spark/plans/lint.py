@@ -94,18 +94,24 @@ def _strip_sql_comments(sql: str) -> str:
     return re.sub(r"--[^\n]*", "", sql)
 
 
+def _close(sql: str, i: int) -> int:
+    """Index just past the paren that closes the one opened before ``i``."""
+    depth = 1
+    while i < len(sql) and depth:
+        if sql[i] == "(":
+            depth += 1
+        elif sql[i] == ")":
+            depth -= 1
+        i += 1
+    return i
+
+
 def _calls(sql: str, funcs: str) -> list[tuple[int, str, int]]:
     """(start, argument text, end) of every call to one of the
     ``|``-separated ``funcs`` (paren-balanced)."""
     out = []
     for m in re.finditer(rf"(?<![a-z_0-9])({funcs})\s*\(", sql, re.I):
-        depth, i = 1, m.end()
-        while i < len(sql) and depth:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
+        i = _close(sql, m.end())
         out.append((m.start(), sql[m.end() : i - 1], i))
     return out
 
@@ -191,11 +197,60 @@ def _terminal_signed_round_problems(name: str, body: str) -> list[str]:
     return problems
 
 
+# --------------------------------------------------------------- CTE chains
+# DuckDB inlines a CTE at every reference unless it is declared
+# MATERIALIZED. In an unrolled iteration (one CTE per step: it0, it1,
+# ...) where step k+1 reads step k twice, every level re-expands the
+# whole chain below it, so the work grows with the depth: the Markov
+# twin (queries/markov.py) took 145 s at sf0.001 until its steps were
+# MATERIALIZED. The lint flags a numbered CTE that the CTEs of the next
+# number read more than once without MATERIALIZED.
+
+_CTE_DEF = re.compile(
+    r"\s*(\w+)\s*(?:\([^()]*\)\s*)?AS\s+(NOT\s+)?(MATERIALIZED\s+)?\(", re.I
+)
+
+
+def _ctes(sql: str) -> list[tuple[str, bool, str]]:
+    """(name, materialized, body) of every CTE of every WITH clause."""
+    out = []
+    for m in re.finditer(r"\bWITH\s+(?:RECURSIVE\s+)?", sql, re.I):
+        i = m.end()
+        while d := _CTE_DEF.match(sql, i):
+            i = _close(sql, d.end())
+            out.append((d.group(1), bool(d.group(3)) and not d.group(2), sql[d.end() : i - 1]))
+            if not (comma := re.compile(r"\s*,").match(sql, i)):
+                break
+            i = comma.end()
+    return out
+
+
+def _unrolled_chain_problems(name: str, body: str) -> list[str]:
+    ctes = _ctes(body)
+    level = {c: int(m.group(1)) for c, _, _ in ctes if (m := re.search(r"(\d+)$", c))}
+    problems = []
+    for cte, materialized, _ in ctes:
+        if materialized or cte not in level:
+            continue
+        ref = re.compile(rf"(?:\bFROM|\bJOIN|,)\s*{cte}\b(?!\s*\()", re.I)
+        reads = sum(len(ref.findall(b)) for c, _, b in ctes if level.get(c) == level[cte] + 1)
+        if reads > 1:
+            problems.append(
+                f"{name}: CTE {cte} is read {reads} times by step "
+                f"{level[cte] + 1} of an unrolled chain — DuckDB re-expands "
+                f"the chain below it at every read; declare it `{cte} AS "
+                "MATERIALIZED`"
+            )
+    return problems
+
+
 def lint_twin_sql(name: str, sql: str) -> list[str]:
-    """Float-policy violations in one oracle twin's SQL (empty = ok)."""
+    """Float-policy and inlined-chain violations in one oracle twin's
+    SQL (empty = ok)."""
     body = _strip_sql_comments(sql)
     problems = []
     problems.extend(_terminal_signed_round_problems(name, body))
+    problems.extend(_unrolled_chain_problems(name, body))
     for m in _LIBM_FUNCS.finditer(body):
         problems.append(
             f"{name}: libm-dependent {m.group(1)}() in twinned SQL — "
@@ -215,7 +270,7 @@ def lint_twin_sql(name: str, sql: str) -> list[str]:
 
 
 def lint_all_twins() -> list[str]:
-    """Run the float-policy lint over every registered oracle twin."""
+    """Run the twin lint over every registered oracle twin."""
     from ..queries import all_queries
 
     problems: list[str] = []

@@ -40,7 +40,7 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.posexplode(F.col("embedding").cast("array<double>")).alias("pos0", "v"),
     ).withColumn("pos", (F.col("pos0") + 1).cast("int")).filter(F.col("pos") <= 8)
-    return flat.groupBy("label", "pos").agg(dmean(F.col("v"), 4).alias("centroid_v"))
+    return flat.groupBy("label", "pos").agg(dmean("v", 4).alias("centroid_v"))
 
 
 @register(

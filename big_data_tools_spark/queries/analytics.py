@@ -494,12 +494,10 @@ _HOLT_HORIZON = 3
 
 @register(
     "monthly_revenue_forecast",
-    # promoted from rows-only to a full twin when the cadence moved to
-    # 4 rounds (tests/test_rotation.py): each fold step re-quantizes
-    # level and trend to 6 decimals (the daily_revenue_cusum recipe),
-    # so a recursive CTE replays the recurrence bit-for-bit; the
-    # pure-Python replication in tests/test_forecast.py still pins it
-    # a third way.
+    # each fold step re-quantizes level and trend to 6 decimals (the
+    # daily_revenue_cusum recipe), so a recursive CTE replays the
+    # recurrence bit-for-bit; the pure-Python replication in
+    # tests/test_forecast.py pins it a third way.
     sql=f"""
     WITH RECURSIVE m AS (
         SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS month,

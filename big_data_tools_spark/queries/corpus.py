@@ -146,7 +146,7 @@ def pretraining_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tok").cast("bigint").alias("total_tokens"),
-        dmean(F.col("quality"), 3).alias("avg_quality"),
+        dmean("quality", 3).alias("avg_quality"),
     )
 
 

@@ -643,7 +643,7 @@ def dedup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("covered") * 2 >= F.col("n_tok"), 1).otherwise(0))
         .cast("bigint")
         .alias("n_heavy_docs"),
-        dmean(F.col("covered") / F.col("n_tok"), 4).alias("avg_coverage"),
+        dmean("covered / n_tok", 4).alias("avg_coverage"),
     )
 
 

@@ -175,14 +175,12 @@ def bucketed_revenue_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orders_incremental_quantile",
-    # promoted from rows-only to a full twin when the cadence moved
-    # to 4 rounds (tests/test_rotation.py): the fixed-grid bin math
-    # is pure integer/exact-double arithmetic, so the oracle
-    # recomputes the merged histogram's median from the raw rows —
-    # which also re-proves merge(parts) == full on every run. Bin
-    # width 600000/128 = 4687.5 is exact binary, floor() identical
-    # across engines; the quantile is the left edge of the first bin
-    # whose cumulative count reaches ceil(0.5 * total).
+    # the fixed-grid bin math is pure integer/exact-double arithmetic,
+    # so the oracle recomputes the merged histogram's median from the
+    # raw rows — which also re-proves merge(parts) == full on every
+    # run. Bin width 600000/128 = 4687.5 is exact binary, floor()
+    # identical across engines; the quantile is the left edge of the
+    # first bin whose cumulative count reaches ceil(0.5 * total).
     sql="""
     WITH b AS (
         SELECT o_orderpriority,

@@ -32,10 +32,10 @@ def _markov_sql() -> str:
     """Unrolled-iteration DuckDB twin: mass table at (variant, state)
     grain per iteration, conversion mass accumulated separately.
 
-    Each ``it{k}`` is read twice by level k+1 (by ``it{k+1}`` and
-    ``cv{k+1}``); inlined, DuckDB re-expands the whole chain below every
-    reference, so the work grows with each level. MATERIALIZED computes
-    each level once."""
+    Each ``it{k}`` (``it0`` included) is read twice by level k+1 (by
+    ``it{k+1}`` and ``cv{k+1}``); inlined, DuckDB re-expands the whole
+    chain below every reference, so the work grows with each level.
+    MATERIALIZED computes each level once."""
     its = []
     for k in range(1, _MK_ITERS + 1):
         prev = f"it{k - 1}"
@@ -105,7 +105,7 @@ def _markov_sql() -> str:
         WHERE src NOT IN ('(start)', '(conv)', '(null)')
     ), variants AS (
         SELECT '(base)' AS ch UNION ALL SELECT ch FROM channels
-    ), it0 AS (
+    ), it0 AS MATERIALIZED (
         SELECT ch, '(start)' AS state, CAST(1000000 AS BIGINT) AS mass_u
         FROM variants
     ), cv0 AS (

@@ -71,27 +71,10 @@ def get(name: str) -> QuerySpec:
     return _REGISTRY[name]
 
 
-# The driver's correctness gate checks the FIRST 50 entries of
-# ``queries()``. The window ROTATES each round (tests/test_rotation.py
-# enforces the 4-round union invariant against checked_rounds.json).
-# Round 8 seats the 17 pending_r7 wave twins, retires the ENTIRE
-# rows-only driver-evidence debt (all 20 never-driver-run entries get
-# their first driver rows), and re-rows 13 oldest-coverage r4 twins so
-# the r9 mandatory load stays under the window.
-# Everything past the window keeps its committed driver rows and is
-# still oracle-checked locally by tests/test_oracle_parity.py.
+# The driver's correctness gate checks the first 50 entries of
+# ``queries()``; this order is the driver contract. tests/test_oracle_parity.py
+# checks every twin, and the window's twins again at sf0.01.
 _PRIORITY = [
-    # ---- round-11 window (50): the 48 cadence-mandatory twins (the
-    # full output of tools/update_checked_rounds.py --plan after r10 —
-    # includes the pending_r10 pair delta_read_snapshot /
-    # iceberg_read_snapshot, r10 verdict next #2, and the two NEW r11
-    # twins delta_read_column_mapping (name-mode column mapping read,
-    # r10 verdict next #5) and iceberg_read_pos_delete (v2
-    # position-delete read, r10 verdict stretch #7)), plus 2 free
-    # seats: embedding_hubness_audit_ann (rows-only RE-SEAT — its
-    # scoring join changed to the salted/broadcast IvfIndex.search
-    # plan, r10 verdict next #1) and dedup_semantic_groups (rows-only
-    # re-seat alongside the r10 verdict #4 regression work).
     "bm25_topk_docs",
     "copurchase_adamic_adar",
     "copurchase_assortativity",
@@ -142,7 +125,6 @@ _PRIORITY = [
     "yelp_basetable_mini",
     "embedding_hubness_audit_ann",
     "dedup_semantic_groups",
-    # ---- window boundary (50) ----
     "benchmark_contamination",
     "boilerplate_ngrams",
     "bucketed_revenue_join",
@@ -192,8 +174,6 @@ _PRIORITY = [
     "waiting_supplier_lines",
     "dedup_containment_prefix",
     "corpus_token_drift",
-    # past-window: driver-rowed in r1..r9, still oracle-checked
-    # locally by tests/test_oracle_parity.py every round.
     "customer_tcloseness",
     "doc_length_quantiles",
     "doc_token_stats",

@@ -79,7 +79,7 @@ def order_rollup_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_cust = scored.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
         F.count(F.lit(1)).alias("n_orders"),
         money_sum(F.col("o_totalprice")).alias("sum_price"),
-        dmean(F.col("adjusted_price")).alias("avg_adjusted_price"),
+        dmean("adjusted_price").alias("avg_adjusted_price"),
         F.count(F.when(F.col("o_totalprice") > 20000, True)).alias("n_big"),
         F.count(F.when(F.col("o_totalprice") <= 20000, True)).alias("n_small"),
     )
@@ -119,9 +119,9 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             money_sum(F.col("l_quantity")).alias("sum_qty"),
             money_sum(F.col("l_extendedprice")).alias("sum_base_price"),
             dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("sum_disc_price"),
-            money_avg(F.col("l_quantity")).alias("avg_qty"),
-            money_avg(F.col("l_extendedprice")).alias("avg_price"),
-            money_avg(F.col("l_discount"), 4).alias("avg_disc"),
+            money_avg("l_quantity").alias("avg_qty"),
+            money_avg("l_extendedprice").alias("avg_price"),
+            money_avg("l_discount", 4).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
             F.count(F.when(F.col("l_quantity") > 25, True)).alias("n_bulk"),
         )
@@ -160,7 +160,7 @@ def regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("r_name").agg(
         F.count(F.lit(1)).alias("n_orders"),
         money_sum(F.col("o_totalprice")).alias("revenue"),
-        money_avg(F.col("o_totalprice")).alias("avg_order"),
+        money_avg("o_totalprice").alias("avg_order"),
     )
 
 
@@ -188,7 +188,7 @@ def priority_recode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return recoded.groupBy("urgency").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        money_avg(F.col("o_totalprice")).alias("avg_price"),
+        money_avg("o_totalprice").alias("avg_price"),
     )
 
 
@@ -218,7 +218,7 @@ def part_like_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).alias("n_parts"),
-            money_avg(F.col("p_retailprice")).alias("avg_price"),
+            money_avg("p_retailprice").alias("avg_price"),
         )
     )
 
@@ -362,7 +362,7 @@ def nation_customer_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return per_cust.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).alias("n_customers"),
-        dmean(F.col("cust_total"), 2, 2).alias("avg_cust_total"),
+        dmean("cust_total", 2, 2).alias("avg_cust_total"),
     )
 
 

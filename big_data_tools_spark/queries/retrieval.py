@@ -246,7 +246,7 @@ def doc_perplexity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return per_doc.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        dmean(F.col("nll"), 3).alias("avg_nll"),
+        dmean("nll", 3).alias("avg_nll"),
     )
 
 
@@ -524,7 +524,7 @@ def doc_bigram_backoff_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("nb").alias("n_bigrams"),
         F.round(F.sum("nbo").cast("double") / F.sum("nb"), 6).alias("backoff_rate"),
-        dmean(F.col("nll"), 3).alias("avg_nll"),
+        dmean("nll", 3).alias("avg_nll"),
     )
     from ..operators.cache import track_cache
 

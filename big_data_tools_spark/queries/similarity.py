@@ -78,7 +78,7 @@ def embedding_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
-            dmean(F.col("norm"), 3).alias("avg_norm"),
+            dmean("norm", 3).alias("avg_norm"),
         )
     )
 
@@ -347,7 +347,7 @@ def embedding_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "v"),
     )
-    cent_long = flat.groupBy("label", "pos").agg(dmean(F.col("v"), 6).alias("cv"))
+    cent_long = flat.groupBy("label", "pos").agg(dmean("v", 6).alias("cv"))
     cent = (
         cent_long.groupBy("label")
         .agg(

@@ -61,7 +61,7 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.round(F.avg("n_tok"), 2).alias("avg_tokens"),
             F.round(F.avg("n_char"), 2).alias("avg_chars"),
-            dmean(F.col("atl"), 2).alias("avg_token_len"),
+            dmean("atl", 2).alias("avg_token_len"),
         )
     )
 
@@ -101,7 +101,7 @@ def doc_quality_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            dmean(F.col("quality"), 3).alias("avg_quality"),
+            dmean("quality", 3).alias("avg_quality"),
         )
     )
 
@@ -466,7 +466,7 @@ def doc_repetition_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep = d.select("source", repetition_ratio(F.col("text"), 3).alias("rep"))
     return rep.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        dmean(F.col("rep"), 4).alias("avg_repetition"),
+        dmean("rep", 4).alias("avg_repetition"),
         F.sum(F.when(F.col("rep") > 0.1, 1).otherwise(0)).cast("bigint").alias("high_rep_docs"),
     )
 

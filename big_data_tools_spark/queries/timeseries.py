@@ -227,10 +227,7 @@ def events_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_stickiness",
-    # promoted from rows-only to a full twin when the cadence moved to
-    # 4 rounds (the 3-round window ceiling had blocked it; see
-    # tests/test_rotation.py) — same SQL tests/test_stickiness.py has
-    # been pinning locally since round 4
+    # same SQL tests/test_stickiness.py pins locally
     sql="""
     WITH mdu AS (
         SELECT DISTINCT date_trunc('month', CAST(ts AS DATE)) AS month,

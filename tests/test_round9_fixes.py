@@ -78,7 +78,7 @@ def _compare_at_partitions(spark, name: str, sf: str, parts: int):
 def test_norm_distinguishes_signed_zero():
     """The local compare must distinguish exactly what the driver
     distinguishes — collapsing -0.0 kept the r8 class invisible to
-    LOCAL_PARITY, DRYRUN and test_oracle_parity simultaneously."""
+    every local parity record, DRYRUN and test_oracle_parity at once."""
     assert _norm(-0.0) != _norm(0.0)
     assert _norm(0.0) == "0.0"
     assert _norm(-0.0) == "-0.0"

@@ -8,9 +8,11 @@ positive/negative review counts, covid label recode, join grain.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from big_data_tools_spark.ml import featurize
 from big_data_tools_spark.pipeline.yelp import (
+    MAP_ATTR_COLS,
     build_basetable,
     checkin_metrics,
     clean_business,
@@ -104,6 +106,30 @@ def test_clean_business_encoding(tables):
     assert b1["weekly_hours_open"] == 16
     # close == open -> treated as wraparound full day (:502: close <= open)
     assert rows["b4"]["Monday_avail"] == 24
+
+
+def _build_jobs(spark, group: str, business) -> list[int]:
+    """Spark jobs submitted while clean_business plans (no action)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        clean_business(business)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_dummy_names_found_in_one_job(spark, tables):
+    """One aggregate finds the dummy names of every dict-literal block:
+    planning with all four blocks submits the same jobs as with one
+    (a pivot without a value list ran its own job per block)."""
+    business = tables["business"]
+    others = [c.split("_", 1)[1] for c in MAP_ATTR_COLS[1:]]
+    one_block = business.withColumn("attributes", F.col("attributes").dropFields(*others))
+    every = _build_jobs(spark, "dummies-all", business)
+    one = _build_jobs(spark, "dummies-one", one_block)
+    assert len(every) == len(one) > 0
 
 
 def test_basetable_grain_and_repair(tables):
