@@ -14,21 +14,15 @@ registry runs don't accumulate cached partitions across a shared session.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame
 
+# Tags ride Python DataFrame objects, so any wrapper transformation
+# (.select/.join/.groupBy) silently drops them — a query that
+# post-processes a tagged operator result returns an untagged frame and
+# release_caches() on it frees nothing. Harness code (perfbench, the
+# oracle compare, test fixtures) therefore calls release_all_caches()
+# between queries, which frees everything regardless of tags.
 _ATTR = "_bdt_cached_frames"
-
-# Every frame ever tagged, session-wide. Tags ride Python DataFrame
-# objects, so any wrapper transformation (.select/.join/.groupBy)
-# silently drops them — a query that post-processes a tagged operator
-# result returns an untagged frame and release_caches() on it frees
-# nothing. Harness code (perfbench, the oracle compare, test fixtures)
-# therefore calls release_all_caches() between queries, which frees
-# everything regardless of tag propagation. WeakSet so the registry
-# never keeps frames alive by itself.
-_LIVE: "weakref.WeakSet[DataFrame]" = weakref.WeakSet()
 
 
 def track_cache(out: DataFrame, *cached: DataFrame) -> DataFrame:
@@ -40,8 +34,6 @@ def track_cache(out: DataFrame, *cached: DataFrame) -> DataFrame:
         if c.is_cached:
             frames.append(c)
     setattr(out, _ATTR, frames)
-    for f in frames:
-        _LIVE.add(f)
     return out
 
 
@@ -59,39 +51,31 @@ def release_caches(df: DataFrame) -> None:
 
 
 def release_all_caches() -> None:
-    """Unpersist every frame any operator has tagged this session AND
-    sweep the JVM's persistent-RDD registry. The between-queries sweep
-    for harness loops (perfbench, oracle compare): frees persisted
-    intermediates even when (a) a query's wrapper transformations
-    dropped the per-frame tag, or (b) the storage belongs to a
-    ``localCheckpoint`` (fixpoint loops), whose blocks are unreachable
-    from any DataFrame handle — ``df.unpersist()`` cannot free them.
+    """Drop every CacheManager entry AND sweep the JVM's persistent-RDD
+    registry. The between-queries sweep for harness loops (perfbench,
+    oracle compare): frees persisted intermediates even when (a) a
+    query's wrapper transformations dropped the per-frame tag, or (b)
+    the storage belongs to a ``localCheckpoint`` (fixpoint loops),
+    whose blocks are unreachable from any DataFrame handle —
+    ``df.unpersist()`` cannot free them.
 
     Call only at a point where no query is still mid-flight: swept
     checkpoint frames cannot be recomputed (lineage is truncated), so
     consumers must rebuild from the query function, which harness
     loops do anyway."""
-    for c in list(_LIVE):
-        try:
-            c.unpersist()
-        except Exception:
-            pass
-    _LIVE.clear()
-
     from pyspark.sql import SparkSession
 
     s = SparkSession.getActiveSession()
     if s is None:
         return
-    # CacheManager sweep: _LIVE is a WeakSet, so a persisted frame
-    # whose Python handle was GC'd never gets df.unpersist() here, and
-    # the RDD-blocks sweep below does NOT remove the JVM CacheManager
-    # entry — any LATER plan containing the same fragment then
-    # substitutes an InMemoryRelation (recompute-into-cache, with the
-    # cached entry's stats), which flipped a join to BNLJ under
-    # full-suite test order (r9 verdict: test_containment_no_cartesian
-    # order-dependent failure). clearCache() drops every CacheManager
-    # entry; safe here because this is only called between queries.
+    # CacheManager sweep: the RDD-blocks sweep below does NOT remove
+    # the JVM CacheManager entry — any LATER plan containing the same
+    # fragment then substitutes an InMemoryRelation (recompute-into-
+    # cache, with the cached entry's stats), which flipped a join to
+    # BNLJ under full-suite test order (r9 verdict:
+    # test_containment_no_cartesian order-dependent failure).
+    # clearCache() drops every CacheManager entry, tagged or not; safe
+    # here because this is only called between queries.
     try:
         s.catalog.clearCache()
     except Exception:  # session shutting down — nothing to clear

@@ -83,8 +83,8 @@ TIERS = (
 # Measured crossover for the containment tier (SCALING.md r10 block):
 # on the saturated sf1 sweep the EXACT prefix path reads x4.5/decade
 # (11.4s at sf1) vs the df-capped posting path's x30.7 (82.2s), and
-# the natural Heaps-growth A/B (tools/bench_containment_natural.py)
-# has prefix 2.1-2.4x FASTER with identical exact output; the capped
+# SCALING.md's natural Heaps-growth A/B (20k and 60k docs) has
+# prefix 2.1-2.4x FASTER with identical exact output; the capped
 # path wins only below ~sf0.1 corpus sizes (~5k docs), where the
 # posting join is cheap and the sqrt(N) df cap rarely binds.
 CONTAINMENT_CROSSOVER_DOCS = 5_000

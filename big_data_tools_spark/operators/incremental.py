@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 
+from ..functions.agg import _rounded_mean
+
 # state column suffixes produced by aggregate_state
 _STATE_COLS = ("n", "sum", "min", "max")
 
@@ -70,10 +72,8 @@ def finish_rollup(state: DataFrame, keys: Sequence[str]) -> DataFrame:
         *keys,
         F.col("n").alias("n_rows"),
         F.round(F.col("sum").cast("double"), 2).alias("total"),
-        # divide AFTER the double cast: both engines then divide the
-        # identical IEEE double by the identical count — bit-equal —
-        # whereas decimal division rounds at engine-specific scales
-        F.round(F.col("sum").cast("double") / F.col("n"), 2).alias("mean"),
+        # the exact mean by integer division, the formula the twins render
+        F.expr(_rounded_mean("`sum`", "`n`", 2, 2, spark=True)).alias("mean"),
         F.col("min").alias("lo"),
         F.col("max").alias("hi"),
     )

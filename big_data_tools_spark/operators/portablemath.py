@@ -94,11 +94,6 @@ def plog2_sql(n: str) -> str:
     return f"({pln_sql(n)} / {LN2_LITERAL})"
 
 
-def plog10_ratio_sql(num: str, den: str) -> str:
-    """log10(num/den) via pln difference divided by ln(10) literal."""
-    return f"({pln_ratio_sql(num, den)} / 2.302585092994045684E0)"
-
-
 def pexp_sql(x: str, min_k: int = -62, max_k: int = 62) -> str:
     """SQL for exp(x), x an engine-identical double expression with
     |x| <= ~43 (so the power-of-two exponent k stays within +-62).

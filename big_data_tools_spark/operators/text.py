@@ -47,14 +47,6 @@ def avg_token_len(col: Column) -> Column:
     return total.cast("double") / F.size(t)
 
 
-def stopword_ratio(col: Column, stopwords: list[str] | None = None) -> Column:
-    """Fraction of tokens that are stopwords (counts repeats)."""
-    sw = F.array(*[F.lit(w) for w in (stopwords or STOPWORDS_EN)])
-    t = tokens(col)
-    hits = F.size(F.filter(t, lambda x: F.array_contains(sw, x)))
-    return hits.cast("double") / F.size(t)
-
-
 def non_alpha_ratio(col: Column) -> Column:
     """Fraction of characters that are not [a-z0-9 ] after lowering."""
     lowered = F.lower(col)

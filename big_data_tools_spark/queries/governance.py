@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.agg import _rounded_mean
 from ..io.sources import load_table
 from ..operators.cache import track_cache
 from ..operators.incremental import aggregate_state, finish_rollup, merge_states
@@ -20,13 +21,13 @@ _CUTOFF = "1997-01-01"  # history/delta split for the incremental demo
 
 @register(
     "orders_incremental_rollup",
-    sql="""
+    sql=f"""
     SELECT o_orderstatus, o_orderpriority,
            CAST(count(o_totalprice) AS BIGINT) AS n_rows,
            round(CAST(sum(CAST(o_totalprice AS DECIMAL(28,2))) AS DOUBLE), 2)
                AS total,
-           round(CAST(sum(CAST(o_totalprice AS DECIMAL(28,2))) AS DOUBLE)
-                 / count(o_totalprice), 2) AS mean,
+           {_rounded_mean("sum(CAST(o_totalprice AS DECIMAL(28,2)))",
+                          "count(o_totalprice)", 2, 2, spark=False)} AS mean,
            min(o_totalprice) AS lo,
            max(o_totalprice) AS hi
     FROM orders GROUP BY 1, 2

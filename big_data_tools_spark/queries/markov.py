@@ -92,7 +92,7 @@ def _markov_sql() -> str:
     ), counts AS (
         SELECT src, dst, CAST(count(*) AS BIGINT) AS n
         FROM trans_raw GROUP BY src, dst
-    ), edges AS (
+    ), edges AS MATERIALIZED (
         SELECT src, dst,
                CAST(round(n * 1000000.0
                           / sum(n) OVER (PARTITION BY src)) AS BIGINT) AS p_u

@@ -115,6 +115,31 @@ def test_mean_half_cent_matches_duckdb(spark, helper, rows, expected):
     assert got_spark == got_duckdb == expected
 
 
+@pytest.mark.parametrize("rows,expected", [((1.0, 1.01), 1.01), ((-1.0, -1.01), -1.01)])
+def test_rollup_mean_half_cent_matches_duckdb(spark, rows, expected):
+    # as in test_mean_half_cent_matches_duckdb: rounding the DOUBLE
+    # quotient splits the engines, so finish_rollup and its
+    # orders_incremental_rollup twin round the exact mean of the state
+    from big_data_tools_spark.operators.incremental import aggregate_state, finish_rollup
+    from big_data_tools_spark.queries import get
+
+    keys = ["o_orderstatus", "o_orderpriority"]
+    orders = [("F", "1-URGENT", x) for x in rows]
+    df = spark.createDataFrame(
+        orders, "o_orderstatus string, o_orderpriority string, o_totalprice double"
+    )
+    got_spark = finish_rollup(aggregate_state(df, keys, "o_totalprice"), keys).first()["mean"]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE orders (o_orderstatus VARCHAR, o_orderpriority VARCHAR, o_totalprice DOUBLE)"
+    )
+    con.executemany("INSERT INTO orders VALUES (?, ?, ?)", orders)
+    [(got_duckdb,)] = con.execute(
+        f"SELECT mean FROM ({get('orders_incremental_rollup').sql})"
+    ).fetchall()
+    assert got_spark == got_duckdb == expected
+
+
 @pytest.mark.parametrize(
     "helper,args,scale",
     [("money_avg", (2,), 2), ("money_avg", (4,), 2), ("dmean", (3,), 6), ("dmean", (2, 2), 2)],

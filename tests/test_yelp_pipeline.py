@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_tools_spark.ml import featurize
+from big_data_tools_spark.pipeline.fixtures import yelp_tables
 from big_data_tools_spark.pipeline.yelp import (
     MAP_ATTR_COLS,
     build_basetable,
@@ -21,8 +22,6 @@ from big_data_tools_spark.pipeline.yelp import (
     tip_metrics,
     user_fans_per_business,
 )
-
-from .yelp_fixtures import yelp_tables
 
 
 @pytest.fixture(scope="module")
